@@ -178,7 +178,8 @@ object AccountOps extends OpFamily {
     val folded = engine(s).streamingState(graft.streaming.Streams.eventStream(s, d))
       .map(k => (k.aggregateId, k.state.balance_c, k.state.n_purchases, k.state.n_events))
       .toDF("user_id", "balance_c", "n_purchases", "n_events")
-    val t = graft.streaming.Streams.runToTable(s, folded, "graft_api_stream", "update")
+    val t = graft.streaming.Streams.runToTable(s, folded, "graft_api_stream", "update",
+      graft.streaming.Streams.eventShards(s, d))
     t.groupBy("user_id")
       .agg(max_by(struct(col("balance_c"), col("n_purchases"), col("n_events")),
         col("n_events")).as("st"))
@@ -209,7 +210,8 @@ object AccountOps extends OpFamily {
     val out = engine(s).streamingCommands(cmdStream, snapshot)
       .map(o => (o.command.event_id, o.aggregateId, o.accepted))
       .toDF("event_id", "user_id", "accepted")
-    graft.streaming.Streams.runToTable(s, out, "graft_api_stream_cmds", "update")
+    graft.streaming.Streams.runToTable(s, out, "graft_api_stream_cmds", "update",
+      graft.streaming.Streams.eventShards(s, d))
       .select("event_id", "user_id", "accepted")
   }
 

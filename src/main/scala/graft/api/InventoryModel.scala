@@ -254,7 +254,8 @@ object InventoryOps extends OpFamily {
     val folded = engine(s).streamingState(evs)
       .map(k => (k.aggregateId, k.state.on_hand_c, k.state.reserved_c, k.state.n_events))
       .toDF("sku_id", "on_hand_c", "reserved_c", "n_events")
-    val t = graft.streaming.Streams.runToTable(s, folded, "graft_api_inv_stream", "update")
+    val t = graft.streaming.Streams.runToTable(s, folded, "graft_api_inv_stream", "update",
+      graft.streaming.Streams.eventShards(s, d))
     t.groupBy("sku_id")
       .agg(max_by(struct(col("on_hand_c"), col("reserved_c"), col("n_events")),
         col("n_events")).as("st"))

@@ -71,8 +71,7 @@ object Clusters extends OpFamily {
     // per partition keeps a 10^9-edge graph at full width while a
     // small graph runs its rounds in 1-2 partitions.
     val shuffleKey = "spark.sql.shuffle.partitions"
-    val loopParts = math.max(1L, math.min(
-      s.conf.get(shuffleKey).toLong, sym.count() / 500000L + 1L))
+    val loopParts = Tables.shards(sym.count(), cap = s.conf.get(shuffleKey).toInt)
     var converged = false
     var rounds = 0
     // scoped + serialized (Tables.withScopedConf): the session conf is

@@ -463,11 +463,10 @@ object TextAnalysis extends OpFamily {
     // CC-loop rule: ~500k rows/partition): the distinct-word table is
     // orders of magnitude smaller than the corpus at any scale, so the
     // K rounds shouldn't pay the session's full shuffle width per
-    // iteration — coalesce (no shuffle) to ⌈|vocab|/500k⌉ partitions;
-    // the count() doubles as the cache materialization, so the corpus
-    // is scanned exactly once for the whole trainer
-    val vocabRows = words.count()
-    val loopParts = math.max(1L, vocabRows / 500000L).toInt
+    // iteration — coalesce (no shuffle) to Tables.shards(|vocab|)
+    // partitions; the count() doubles as the cache materialization, so
+    // the corpus is scanned exactly once for the whole trainer
+    val loopParts = Tables.shards(words.count())
     var vocab = words.coalesce(loopParts).withColumn("repr",
       concat(lit("#"), array_join(split(col("w"), ""), "##"), lit("#")))
     for (_ <- 1 to merges) {

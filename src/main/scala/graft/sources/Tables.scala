@@ -307,6 +307,17 @@ object Tables {
     }
   }
 
+  /** Rows per partition of the repo-wide sizing law. */
+  val rowsPerShard = 500000L
+
+  /** The one partition-sizing law: ⌈rows / perShard⌉ clamped to
+    * [min, cap] (the cap applies first, so `min` wins when cap < min).
+    * Every data-volume-sized shard, bucket and loop width goes through
+    * this; each caller keeps its own fallback for unknown mass. */
+  def shards(rows: Long, perShard: Long = rowsPerShard, min: Int = 1,
+      cap: Int = Int.MaxValue): Int =
+    math.max(min.toLong, math.min(cap.toLong, (rows + perShard - 1) / perShard)).toInt
+
   /** Total ROW COUNT of a parquet table from FOOTER metadata — the
     * row-count sibling of [[maxIdFromStats]]. Block row counts are
     * mandatory parquet metadata (present whether or not any column

@@ -63,18 +63,14 @@ object LiveStore {
   // trigger to carry ~500 keys — the same constant-fan-out defect
   // class the r14 state-shard sizing removed. The layout now derives
   // from the split source's TOTAL footer row mass at store creation
-  // (~500k rows/shard, min 2 so multi-shard pruning stays exercised,
-  // capped at the session default) and is RECORDED in the store dir
-  // (`_nshards`), because the modulus is store METADATA: upsert and
-  // lookup on an existing store must use the count it was created
-  // with, whatever session reads it later. Absent marker = the
+  // (the sizing law Tables.shards, min 2 so multi-shard pruning stays
+  // exercised, capped at the session default) and is RECORDED in the
+  // store dir (`_nshards`), because the modulus is store METADATA:
+  // upsert and lookup on an existing store must use the count it was
+  // created with, whatever session reads it later. Absent marker = the
   // historical 16 (pre-existing stores, direct-upsert specs).
   private[graft] def storeShardsFor(totalRows: Option[Long], sessionMax: Int): Int =
-    totalRows match {
-      case None => nShards
-      case Some(r) =>
-        math.max(2L, math.min(sessionMax.toLong, (r + 499999L) / 500000L)).toInt
-    }
+    totalRows.fold(nShards)(graft.sources.Tables.shards(_, min = 2, cap = sessionMax))
 
   private val shardCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Integer]()
@@ -268,18 +264,12 @@ object LiveStore {
   private def runStoreTo(s: SparkSession, d: String, dir: String): Unit = {
     deleteRec(new java.io.File(dir))
     shardCache.remove(dir)
-    // build the source BEFORE withStreamShards: the source records its
-    // measured per-batch row mass into the session conf, and the shard
-    // sizing reads that conf at withStreamShards entry — constructing
-    // the stream inside the body would size shards from whatever the
-    // PREVIOUS op's source left behind
-    val src = Streams.eventStream(s, d).toDF()
     // pin the fresh store's shard layout from the source's measured
     // total mass (the _nshards marker — see storeShardsFor)
     recordShards(dir, storeShardsFor(Streams.eventSourceRows(s, d),
       s.sessionState.conf.numShufflePartitions))
-    Streams.withStreamShards(s) {
-      val q = src.writeStream
+    Streams.withStreamShards(s, Streams.eventShards(s, d)) {
+      val q = Streams.eventStream(s, d).toDF().writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
           upsert(batch, id, dir)
         }

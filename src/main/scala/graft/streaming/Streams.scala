@@ -172,41 +172,21 @@ object Streams extends OpFamily {
     * any operator. */
   def eventStream(s: SparkSession, d: String): Dataset[Ev] = {
     import s.implicits._
-    if (s.conf.getOption("graft.stream.source").contains("kafka")) {
-      s.conf.unset(sourceMassKey) // broker mass unknown — flat default
-      KafkaWire.readStream(s)
-    } else {
+    if (kafkaTransport(s)) KafkaWire.readStream(s)
+    else {
       // The split files are written post-normalization, so their schema
       // (ts: TimestampType micros) IS the stream schema — no per-arrival
       // conversion here.
-      val src = recordSourceMass(s, splitSource(s, d))
+      val src = splitSource(s, d)
       val stream = s.readStream.schema(s.read.parquet(src).schema)
         .option("maxFilesPerTrigger", "1").parquet(src)
       stream.select("event_id", "ts", "user_id", "event_type", "value").as[Ev]
     }
   }
 
-  /** Run a streaming DF to completion through a `foreachBatch` parquet
-    * sink — the PRODUCTION sink shape (each micro-batch lands
-    * atomically as one directory keyed by batch id; nothing
-    * accumulates in driver memory, so the same harness works at any
-    * result size) — and read the landed result back.
-    *
-    * complete mode: each batch is the full result ⇒ read the last
-    * batch. update/append: batches are deltas ⇒ read their union
-    * (exactly the contents a memory sink would have accumulated). */
-  /** Run `body` with the streaming STATE shard count scoped in: a
-    * stateful operator creates `spark.sql.shuffle.partitions` state
-    * stores, each committing files EVERY micro-batch — at local bench
-    * scale that commit fan-out is ~half the wall-clock of a stream
-    * query (measured: stream_latest 4.1 s → 2.1 s warm when the flat
-    * 32 became a flat 8). Shards now derive from the split source's
-    * MEASURED per-batch row mass (see [[stateShardsFor]] — ~500k
-    * rows/shard, min 2, capped at the session default), so production
-    * widths still grow with throughput while bench-scale batches stop
-    * paying a fixed fan-out; the session value is restored before the
-    * post-stream batch stages plan. Physical planning happens at
-    * start(), so scoping around the stream run is sufficient. */
+  private def kafkaTransport(s: SparkSession): Boolean =
+    s.conf.getOption("graft.stream.source").contains("kafka")
+
   /** `graft.stream.stateStore=rocksdb` swaps every stateful stream_*
     * operator onto Spark's in-box RocksDBStateStoreProvider — the
     * 100 TB posture. The default HDFSBackedStateStoreProvider keeps
@@ -224,92 +204,6 @@ object Streams extends OpFamily {
   private val rocksProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  // ---- state shard sizing from MEASURED source mass (opt round r14) ----
-  // Every stateful operator creates one state store PER SHARD and
-  // commits it EVERY micro-batch (delta file + crc + rename on the
-  // checkpoint FS), and the foreachBatch sink writes one parquet part
-  // per shard per batch — so the per-trigger floor scales linearly
-  // with the shard count while the per-shard work at bench scale is
-  // tens of thousands of rows. The old flat default (8) was itself a
-  // measured cut from the session width (stream_latest 4.1 → 2.1 s),
-  // but it is a CONSTANT — the exact defect class the R32 bucket
-  // count fix (r13 verdict item 1) removed elsewhere. Shards now size
-  // from the split source's measured per-batch row mass (parquet
-  // footer counts — bounded metadata, cached per source dir), under
-  // the repo-wide ~500k rows/partition rule: min 2 (cross-shard state
-  // merge stays exercised), capped at the session shuffle default so
-  // production widths still derive from the session, never a local
-  // constant. Measured at sf0.1 (33k rows/batch ⇒ 2 shards):
-  // stream_latest addBatch ~650 → ~380 ms/batch, warm medians
-  // 3.3 → 2.8 s solo; the win grows under checkpoint-FS pressure
-  // (fsync count per trigger drops 4x).
-  private val sourceMassKey = "graft.stream.sourceRowsPerBatch"
-  private val massCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  /** Record a split source's per-batch row mass (footer counts / the
-    * batch count) into the session conf [[withStreamShards]] sizes
-    * state shards from. Returns the dir so source builders can wrap
-    * their return value. Unlistable dirs unset the conf (unknown mass
-    * falls back to the historical default). */
-  private def recordSourceMass(s: SparkSession, dir: String): String = {
-    val rows = massCache.computeIfAbsent(dir,
-      p => Long.box(Tables.rowCountFromStats(s, p).getOrElse(-1L))).longValue()
-    if (rows >= 0)
-      s.conf.set(sourceMassKey,
-        math.max(1L, (rows + sourceBatches - 1) / sourceBatches).toString)
-    else s.conf.unset(sourceMassKey)
-    dir
-  }
-
-  /** The sizing law: ~500k rows/shard of per-batch INPUT mass, at
-    * least 2, capped at the session shuffle default; unknown mass
-    * keeps the historical flat default. Ops whose STATE is row-scale
-    * (a key per event — command dedup's (user, idem_key), drop-
-    * duplicates on event_id, stream-stream join buffers) additionally
-    * pass their state-key estimate: the HDFS provider's per-batch map
-    * maintenance and complete-mode emission are O(state) work that
-    * PARALLELIZES with shards, so key-heavy state wants more shards
-    * than the input rule — measured at sf0.1, the 73k-key
-    * stream_command_dedup ran addBatch 2.1 s/batch at the input rule's
-    * 2 shards vs 0.65 s at 8 (~10k keys/shard), while 500-key ops are
-    * commit-overhead-bound and best at the floor. Pure, spec-pinned. */
-  private[graft] def stateShardsFor(
-      rowsPerBatch: Option[Long], sessionMax: Int,
-      stateKeys: Option[Long] = None): Int = {
-    val byInput = rowsPerBatch match {
-      case None => return 8
-      case Some(r) =>
-        math.max(2L, math.min(sessionMax.toLong, (r + 499999L) / 500000L))
-    }
-    val byState = stateKeys
-      .map(k => math.min(sessionMax.toLong, (k + 9999L) / 10000L))
-      .getOrElse(0L)
-    math.max(byInput, byState).toInt
-  }
-
-  /** TOTAL footer row mass of the default event split source (None on
-    * the broker transport, whose mass is unknown) — store-layout sizing
-    * reads this at store creation (LiveStore.runStoreTo). */
-  private[streaming] def eventSourceRows(s: SparkSession, d: String): Option[Long] =
-    if (s.conf.getOption("graft.stream.source").contains("kafka")) None
-    else {
-      val dir = splitSource(s, d)
-      val rows = massCache.computeIfAbsent(dir,
-        p => Long.box(Tables.rowCountFromStats(s, p).getOrElse(-1L))).longValue()
-      if (rows >= 0) Some(rows) else None
-    }
-
-  // row-scale-state ops set this to their state-key estimate (the
-  // split source's TOTAL footer row count — bounded metadata) right
-  // before their stream runs; withStreamShards consumes AND clears it
-  // so the hint never leaks into the next op.
-  private val stateKeysKey = "graft.stream.stateKeysHint"
-  private def hintRowScaleState(s: SparkSession, dir: String): Unit = {
-    val rows = massCache.computeIfAbsent(dir,
-      p => Long.box(Tables.rowCountFromStats(s, p).getOrElse(-1L))).longValue()
-    if (rows >= 0) s.conf.set(stateKeysKey, rows.toString)
-  }
   // RocksDB CHANGELOG checkpointing (round 11): by default the RocksDB
   // provider snapshots the full state store to the checkpoint every
   // batch; with changelog checkpointing each batch uploads only the
@@ -323,48 +217,118 @@ object Streams extends OpFamily {
   private val rocksChangelogKey =
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
 
-  private[graft] def withStreamShards[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    val prevProvider = s.conf.getOption(stateStoreKey)
-    val prevChangelog = s.conf.getOption(rocksChangelogKey)
-    val stateKeysHint = s.conf.getOption(stateKeysKey).map(_.toLong)
-    s.conf.unset(stateKeysKey) // one-shot: never leaks into the next op
-    // consume-and-clear the source mass too (r14 verdict item 6): a
-    // stream built WITHOUT a recording source must fall back to the
-    // flat default, not size itself from whatever the previous op's
-    // source left in the session conf
-    val sourceMass = s.conf.getOption(sourceMassKey).map(_.toLong)
-    s.conf.unset(sourceMassKey)
-    s.conf.set(key,
-      s.conf.getOption("graft.stream.statePartitions").getOrElse(
-        stateShardsFor(sourceMass, prev.toInt, stateKeysHint).toString))
-    if (s.conf.getOption("graft.stream.stateStore").contains("rocksdb")) {
-      s.conf.set(stateStoreKey, rocksProvider)
-      if (s.conf.getOption("graft.stream.rocksdbChangelog").contains("true"))
-        s.conf.set(rocksChangelogKey, "true")
-    }
-    try body finally {
-      s.conf.set(key, prev)
-      prevProvider match {
-        case Some(p) => s.conf.set(stateStoreKey, p)
-        case None => s.conf.unset(stateStoreKey)
-      }
-      prevChangelog match {
-        case Some(p) => s.conf.set(rocksChangelogKey, p)
-        case None => s.conf.unset(rocksChangelogKey)
-      }
-    }
+  // ---- state shard sizing from MEASURED source mass (opt round r14) ----
+  // Every stateful operator creates one state store PER SHARD and
+  // commits it EVERY micro-batch (delta file + crc + rename on the
+  // checkpoint FS), and the foreachBatch sink writes one parquet part
+  // per shard per batch — so the per-trigger floor scales linearly
+  // with the shard count while the per-shard work at bench scale is
+  // tens of thousands of rows. A flat constant is the defect class
+  // the R32 bucket count fix removed elsewhere, so shards size from
+  // the op's OWN split source (parquet footer counts — bounded
+  // metadata, cached per source dir) under the repo-wide sizing law
+  // (Tables.shards): min 2 (cross-shard state merge stays exercised),
+  // capped at the session shuffle default so production widths still
+  // derive from the session. Measured at sf0.1 (33k rows/batch ⇒ 2
+  // shards): stream_latest addBatch ~650 → ~380 ms/batch, warm
+  // medians 3.3 → 2.8 s solo. The op computes the count and passes it
+  // to runToTable / withStreamShards as a value: sizing from session
+  // state would read whichever source was built last.
+  private val rowsCache =
+    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+
+  /** Footer row count of a split source dir, cached per dir; None when
+    * the dir is unlistable. */
+  private def sourceRows(s: SparkSession, dir: String): Option[Long] = {
+    val rows = rowsCache.computeIfAbsent(dir,
+      p => Long.box(Tables.rowCountFromStats(s, p).getOrElse(-1L))).longValue()
+    if (rows >= 0) Some(rows) else None
   }
 
-  def runToTable(s: SparkSession, df: DataFrame, name: String, mode: String): DataFrame = {
+  /** Row-scale state budget: state keys per shard. */
+  private val stateKeysPerShard = 10000L
+
+  /** The stream sizing law over a split source's TOTAL row mass: the
+    * per-batch input (total / [[sourceBatches]]) at the sizing law's
+    * rows per shard, at least 2, capped at `sessionMax`; unknown mass
+    * keeps the historical flat default 8. Ops whose STATE is row-scale
+    * (a key per event — command dedup's (user, idem_key), drop-
+    * duplicates on event_id) also budget their state-key estimate (the
+    * total) at ~10k keys/shard: the HDFS provider's per-batch map
+    * maintenance and complete-mode emission are O(state) work that
+    * PARALLELIZES with shards — measured at sf0.1, the 73k-key
+    * stream_command_dedup ran addBatch 2.1 s/batch at the input rule's
+    * 2 shards vs 0.65 s at 8, while 500-key ops are
+    * commit-overhead-bound and best at the floor. Pure, spec-pinned. */
+  private[graft] def stateShardsFor(sourceRows: Option[Long], sessionMax: Int,
+      rowScaleState: Boolean = false): Int =
+    sourceRows match {
+      case None => 8
+      case Some(r) =>
+        val byInput = Tables.shards((r + sourceBatches - 1) / sourceBatches,
+          min = 2, cap = sessionMax)
+        if (rowScaleState)
+          math.max(byInput, Tables.shards(r, stateKeysPerShard, cap = sessionMax))
+        else byInput
+    }
+
+  /** State shards for a stream over the split source at `dir`. */
+  private def splitShards(s: SparkSession, dir: String,
+      rowScaleState: Boolean = false): Int =
+    stateShardsFor(sourceRows(s, dir), s.sessionState.conf.numShufflePartitions,
+      rowScaleState)
+
+  /** TOTAL footer row mass of the default event split source (None on
+    * the broker transport, whose mass is unknown). */
+  private[streaming] def eventSourceRows(s: SparkSession, d: String): Option[Long] =
+    if (kafkaTransport(s)) None else sourceRows(s, splitSource(s, d))
+
+  /** State shards for a stream over [[eventStream]]. */
+  private[graft] def eventShards(s: SparkSession, d: String,
+      rowScaleState: Boolean = false): Int =
+    stateShardsFor(eventSourceRows(s, d), s.sessionState.conf.numShufflePartitions,
+      rowScaleState)
+
+  /** Run `body`, which starts and drains streaming queries, with
+    * `shards` as the state shard count (a stateful operator creates
+    * `spark.sql.shuffle.partitions` state stores) and the configured
+    * state-store provider scoped in. Physical planning happens at
+    * start(), so scoping around the run is sufficient; a query that
+    * resumes from a checkpoint keeps the count its offset log
+    * recorded. Each key goes through Tables.withScopedConf, so two
+    * stream runs in one session serialize instead of restoring each
+    * other's values. */
+  private[graft] def withStreamShards[T](s: SparkSession, shards: Int)(body: => T): T = {
+    val rocks = s.conf.getOption("graft.stream.stateStore").contains("rocksdb")
+    val changelog =
+      rocks && s.conf.getOption("graft.stream.rocksdbChangelog").contains("true")
+    val confs = Seq("spark.sql.shuffle.partitions" -> shards.toString) ++
+      (if (rocks) Seq(stateStoreKey -> rocksProvider) else Nil) ++
+      (if (changelog) Seq(rocksChangelogKey -> "true") else Nil)
+    confs.foldRight(() => body) { case ((k, v), inner) =>
+      () => Tables.withScopedConf(s, k, v)(inner())
+    }()
+  }
+
+  /** Run a streaming DF to completion through a `foreachBatch` parquet
+    * sink — the PRODUCTION sink shape (each micro-batch lands
+    * atomically as one directory keyed by batch id; nothing
+    * accumulates in memory, so the same harness works at any
+    * result size) — with `shards` state shards, and read the landed
+    * result back.
+    *
+    * complete mode: each batch is the full result ⇒ read the last
+    * batch. update/append: batches are deltas ⇒ read their union
+    * (exactly the contents a memory sink would have accumulated). */
+  def runToTable(s: SparkSession, df: DataFrame, name: String, mode: String,
+      shards: Int): DataFrame = {
     val dir = new java.io.File(s"${graft.sources.Tables.workDir(s)}/sink_$name")
     def deleteRec(f: java.io.File): Unit = {
       Option(f.listFiles()).foreach(_.foreach(deleteRec))
       f.delete(); ()
     }
     deleteRec(dir)
-    withStreamShards(s) {
+    withStreamShards(s, shards) {
       val q = df.writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
           batch.write.mode("overwrite").parquet(s"$dir/b_$id")
@@ -392,7 +356,7 @@ object Streams extends OpFamily {
   // streaming path; oracle identical to the batch fold (es_state_fold).
   private def streamFold(s: SparkSession, d: String): DataFrame = {
     val folded = foldEvents(eventStream(s, d)).toDF()
-    val t = runToTable(s, folded, "graft_stream_fold", "update")
+    val t = runToTable(s, folded, "graft_stream_fold", "update", eventShards(s, d))
     // update mode emits one row per key per batch — keep the row from
     // each key's LAST batch (batch ids are unique, so the argmax is
     // well-defined at any batch count; tiny one-row-per-key harness
@@ -416,7 +380,7 @@ object Streams extends OpFamily {
 
   private def streamLatest(s: SparkSession, d: String): DataFrame =
     runToTable(s, latestStateAgg(eventStream(s, d).toDF()),
-      "graft_stream_latest", "complete")
+      "graft_stream_latest", "complete", eventShards(s, d))
 
   // W5: streaming tumbling-window aggregation.
   private def streamWindow(s: SparkSession, d: String): DataFrame = {
@@ -425,7 +389,7 @@ object Streams extends OpFamily {
       .agg(count(lit(1)).as("n"), sum(cents(col("value"))).as("sum_c"))
       .select(unix_timestamp(col("w.start")).as("bucket_s"), col("event_type"),
         col("n"), col("sum_c"))
-    runToTable(s, agg, "graft_stream_window", "complete")
+    runToTable(s, agg, "graft_stream_window", "complete", eventShards(s, d))
   }
 
   // W6: streaming dedup on event id with watermarked state expiry.
@@ -436,8 +400,8 @@ object Streams extends OpFamily {
     // dropDuplicates keeps a state key PER EVENT (row-scale state —
     // the stream_command_dedup finding): shards size from the state
     // estimate, not just the batch input
-    hintRowScaleState(s, splitSource(s, d))
-    runToTable(s, deduped, "graft_stream_dedup", "append")
+    runToTable(s, deduped, "graft_stream_dedup", "append",
+      eventShards(s, d, rowScaleState = true))
       .groupBy("event_type").agg(count(lit(1)).as("n"))
   }
 
@@ -523,7 +487,7 @@ object Streams extends OpFamily {
 
   private def streamGaps(s: SparkSession, d: String): DataFrame = {
     val out = gapStream(eventStream(s, d)).toDF()
-    val t = runToTable(s, out, "graft_stream_gaps", "update")
+    val t = runToTable(s, out, "graft_stream_gaps", "update", eventShards(s, d))
     // keep each key's emission from its LAST batch (the one that has
     // seen the whole log); tiny one-row-per-key harness table
     t.groupBy("user_id")
@@ -567,7 +531,7 @@ object Streams extends OpFamily {
 
   private def streamAuditChain(s: SparkSession, d: String): DataFrame = {
     val out = chainStream(eventStream(s, d)).toDF()
-    val t = runToTable(s, out, "graft_stream_audit_chain", "update")
+    val t = runToTable(s, out, "graft_stream_audit_chain", "update", eventShards(s, d))
     t.groupBy("user_id")
       .agg(max_by(struct(col("n_events"), col("chain_head")),
         col("_batch_id")).as("st"))
@@ -605,7 +569,7 @@ object Streams extends OpFamily {
 
   private def streamPathing(s: SparkSession, d: String): DataFrame = {
     val out = pathStream(eventStream(s, d)).toDF()
-    runToTable(s, out, "graft_stream_pathing", "append")
+    runToTable(s, out, "graft_stream_pathing", "append", eventShards(s, d))
       .groupBy("step1", "step2", "step3")
       .agg(count(lit(1)).as("n_paths"),
         countDistinct(col("user_id")).as("n_users"))
@@ -613,7 +577,7 @@ object Streams extends OpFamily {
 
   private def streamEwma(s: SparkSession, d: String): DataFrame = {
     val out = ewmaStream(eventStream(s, d)).toDF()
-    val t = runToTable(s, out, "graft_stream_ewma", "update")
+    val t = runToTable(s, out, "graft_stream_ewma", "update", eventShards(s, d))
     // keep each key's emission from its LAST batch — n_used would tie
     // at 20 across batches for active keys and pick arbitrarily
     t.groupBy("user_id")
@@ -667,7 +631,7 @@ object Streams extends OpFamily {
   // oracle = the batch es_latest_n oracle ⇒ batch/stream parity.
   private def streamLatestN(s: SparkSession, d: String): DataFrame = {
     val out = tailStream(eventStream(s, d), 5).toDF()
-    val t = runToTable(s, out, "graft_stream_latest_n", "update")
+    val t = runToTable(s, out, "graft_stream_latest_n", "update", eventShards(s, d))
     val lastBatch = t.groupBy("user_id")
       .agg(max(col("_batch_id")).as("_batch_id"))
     t.join(lastBatch, Seq("user_id", "_batch_id"))
@@ -766,7 +730,7 @@ object Streams extends OpFamily {
   // batch; oracle = the batch signal_pattern oracle.
   private def streamSignal(s: SparkSession, d: String): DataFrame = {
     val agg = graft.operators.Windows.matcherCounts(eventStream(s, d).toDF())
-    val t = runToTable(s, agg, "graft_stream_signal", "complete")
+    val t = runToTable(s, agg, "graft_stream_signal", "complete", eventShards(s, d))
     graft.operators.Windows.matcherSignals(t)
   }
 
@@ -780,7 +744,7 @@ object Streams extends OpFamily {
   // supervision loop is proven bit-equal to the batch decision log.
   private def streamSupervision(s: SparkSession, d: String): DataFrame = {
     val agg = graft.operators.Windows.matcherCounts(eventStream(s, d).toDF())
-    val t = runToTable(s, agg, "graft_stream_supervision", "complete")
+    val t = runToTable(s, agg, "graft_stream_supervision", "complete", eventShards(s, d))
     graft.operators.Windows.superviseDecisions(
       graft.operators.Windows.matcherSignals(t))
   }
@@ -800,7 +764,7 @@ object Streams extends OpFamily {
       .agg(count(lit(1)).as("sess_n"), sum(cents(col("value"))).as("sum_c"))
       .select(col("user_id"), unix_timestamp(col("w.start")).as("sess_start_s"),
         col("sess_n"), col("sum_c"))
-    runToTable(s, agg, "graft_stream_session", "complete")
+    runToTable(s, agg, "graft_stream_session", "complete", eventShards(s, d))
   }
 
   // W14: stream-stream interval join under the ORACLE — W8's
@@ -838,12 +802,11 @@ object Streams extends OpFamily {
     // (keyWithIndex + keyWithNumValues, each side), so its per-trigger
     // commit fan-out is 4x a stateful aggregation's at any shard
     // count — the old flat-8 era halved it to an explicit 4 (measured
-    // 5.1 -> 4.0 s warm at sf0.1). The mass-derived sizing in
-    // withStreamShards now lands BELOW that at bench scale (2 shards
-    // for a 33k-row batch) and still scales with the measured source,
-    // so the override is gone; an explicit graft.stream.statePartitions
-    // conf still wins inside withStreamShards.
-    runToTable(s, joined, "graft_stream_join", "append").drop("_batch_id")
+    // 5.1 -> 4.0 s warm at sf0.1). The mass-derived sizing
+    // (eventShards) now lands BELOW that at bench scale (2 shards for a
+    // 33k-row batch) and still scales with the measured source, so the
+    // override is gone.
+    runToTable(s, joined, "graft_stream_join", "append", eventShards(s, d)).drop("_batch_id")
   }
 
   private val streamJoinSql =
@@ -862,7 +825,7 @@ object Streams extends OpFamily {
   private def streamConsumerLag(s: SparkSession, d: String): DataFrame =
     runToTable(s,
       graft.operators.MetricsOps.consumerLagAgg(eventStream(s, d).toDF()),
-      "graft_stream_consumer_lag", "complete")
+      "graft_stream_consumer_lag", "complete", eventShards(s, d))
 
   // M15's streaming twin: the ops heatmap is a dashboard tile — it
   // exists to be CURRENT. The same bounded-grid hash-agg runs on the
@@ -872,7 +835,7 @@ object Streams extends OpFamily {
   private def streamHeatmap(s: SparkSession, d: String): DataFrame =
     runToTable(s,
       graft.operators.MetricsOps.heatmapAgg(eventStream(s, d).toDF()),
-      "graft_stream_heatmap", "complete")
+      "graft_stream_heatmap", "complete", eventShards(s, d))
 
   // M17's streaming twin `stream_downsample`: the TSDB roll-up as the
   // retention job actually runs it — candles maintained live while
@@ -885,7 +848,7 @@ object Streams extends OpFamily {
   private def streamDownsample(s: SparkSession, d: String): DataFrame =
     runToTable(s,
       graft.operators.MetricsOps.downsampleAgg(eventStream(s, d).toDF()),
-      "graft_stream_downsample", "complete")
+      "graft_stream_downsample", "complete", eventShards(s, d))
 
   // E29's streaming twin `stream_command_dedup`: the idempotency gate
   // where it actually lives — in front of the live command stream. The
@@ -897,12 +860,7 @@ object Streams extends OpFamily {
   // straight off the split source; oracle = E29's ⇒ batch/stream
   // parity for every verdict field.
   private def streamCommandDedup(s: SparkSession, d: String): DataFrame = {
-    val src = recordSourceMass(s, splitSource(s, d))
-    // state is a key per (user, idem_key) ≈ one per event — row-scale,
-    // so shards size from the state estimate, not just batch input
-    // (measured: addBatch 2.1 s/batch at the input rule's 2 shards vs
-    // 0.65 s at 8 on the 73k-key sf0.1 state)
-    hintRowScaleState(s, src)
+    val src = splitSource(s, d)
     val raw = s.readStream.schema(s.read.parquet(src).schema)
       .option("maxFilesPerTrigger", "1").parquet(src)
     val agg = raw
@@ -916,7 +874,12 @@ object Streams extends OpFamily {
       .select(col("user_id"), col("idem_key"), col("n_attempts"),
         graft.operators.Packed.eventId(col("pk")).as("accepted_event_id"),
         (col("n_attempts") - 1).as("n_duplicates"))
-    runToTable(s, agg, "graft_stream_command_dedup", "complete")
+    // state is a key per (user, idem_key) ≈ one per event — row-scale,
+    // so shards size from the state estimate, not just batch input
+    // (measured: addBatch 2.1 s/batch at the input rule's 2 shards vs
+    // 0.65 s at 8 on the 73k-key sf0.1 state)
+    runToTable(s, agg, "graft_stream_command_dedup", "complete",
+      splitShards(s, src, rowScaleState = true))
   }
 
   // M21's streaming twin `stream_availability`: the uptime roll-up as
@@ -929,7 +892,7 @@ object Streams extends OpFamily {
   private def streamAvailability(s: SparkSession, d: String): DataFrame = {
     val grid = runToTable(s,
       graft.operators.MetricsOps.observedHours(eventStream(s, d).toDF()),
-      "graft_stream_availability", "complete")
+      "graft_stream_availability", "complete", eventShards(s, d))
     graft.operators.MetricsOps.availabilityRollup(
       grid.select("event_type", "day", "hr"))
   }
@@ -945,7 +908,7 @@ object Streams extends OpFamily {
   private def streamEscalation(s: SparkSession, d: String): DataFrame = {
     val grid = runToTable(s,
       graft.operators.Windows.firedGrid(eventStream(s, d).toDF()),
-      "graft_stream_escalation", "complete")
+      "graft_stream_escalation", "complete", eventShards(s, d))
     graft.operators.Windows.escalationRuns(
       grid.select("user_id", "hr", "n_errors"))
   }
@@ -974,7 +937,7 @@ object Streams extends OpFamily {
       .forecastModel(Tables.events(s, d)))
     runToTable(s,
       graft.operators.MetricsOps.forecastEvalAgg(eventStream(s, d).toDF(), model),
-      "graft_stream_forecast", "complete")
+      "graft_stream_forecast", "complete", eventShards(s, d))
   }
 
   // M11's streaming twin: an SLO burn-rate page is only a page while
@@ -987,7 +950,7 @@ object Streams extends OpFamily {
   private def streamSloBurn(s: SparkSession, d: String): DataFrame =
     runToTable(s,
       graft.operators.MetricsOps.sloBurnAgg(eventStream(s, d).toDF()),
-      "graft_stream_slo_burn", "complete")
+      "graft_stream_slo_burn", "complete", eventShards(s, d))
 
   // M13's streaming twin `stream_anomaly`: production anomaly alerting
   // scores INCOMING readings against a TRAINED baseline — the moments
@@ -1007,7 +970,7 @@ object Streams extends OpFamily {
       .anomalyMoments(Tables.events(s, d)))
     runToTable(s,
       graft.operators.MetricsOps.anomalyFlag(eventStream(s, d).toDF(), baseline),
-      "graft_stream_anomaly", "append").drop("_batch_id")
+      "graft_stream_anomaly", "append", eventShards(s, d)).drop("_batch_id")
   }
 
   // P19's streaming twin `stream_deciles`: the corpus length
@@ -1030,12 +993,13 @@ object Streams extends OpFamily {
     val t = graft.functions.Dedup.incThreshold(s, d)
     val baseGrid = Pipeline.docTok(s, d).filter(col("doc_id") <= t)
       .groupBy("n_tok").agg(count(lit(1)).as("c"))
+    val src = docSplitSource(s, d)
     val streamedGrid = runToTable(s,
       s.readStream.schema(Tables.documents(s, d).schema)
-        .option("maxFilesPerTrigger", "1").parquet(docSplitSource(s, d))
+        .option("maxFilesPerTrigger", "1").parquet(src)
         .select(size(split(col("text"), " ")).cast("long").as("n_tok"))
         .groupBy("n_tok").agg(count(lit(1)).as("c")),
-      "graft_stream_deciles", "complete")
+      "graft_stream_deciles", "complete", splitShards(s, src))
     val grid = baseGrid.unionByName(streamedGrid)
       .groupBy("n_tok").agg(sum(col("c")).as("c"))
     Pipeline.decilesFromGrid(Pipeline.docTok(s, d), grid)
@@ -1067,8 +1031,9 @@ object Streams extends OpFamily {
     val idx = Dedup.bloomGateIndex(s, d)
     val hint = Dedup.bloomGateAttachHint(s, d)
     val might = Dedup.bloomMightOverH(idx)
+    val src = docSplitSource(s, d)
     val stream = s.readStream.schema(Tables.documents(s, d).schema)
-      .option("maxFilesPerTrigger", "1").parquet(docSplitSource(s, d))
+      .option("maxFilesPerTrigger", "1").parquet(src)
       .select(col("doc_id"), md5(col("text")).as("h"))
     val positives = stream.filter(might)
       .join(idx.hint(hint), Seq("h"), "left")
@@ -1080,7 +1045,7 @@ object Streams extends OpFamily {
         .select(col("doc_id"),
           when(col("dup_of").isNotNull, "dup").otherwise("new").as("verdict"),
           col("dup_of")),
-      "graft_stream_bloom_gate", "append").drop("_batch_id")
+      "graft_stream_bloom_gate", "append", splitShards(s, src)).drop("_batch_id")
   }
 
   // D10's streaming twin `stream_admit`: the admission gate as the
@@ -1126,14 +1091,14 @@ object Streams extends OpFamily {
   private def docSplitSource(s: SparkSession, d: String): String = {
     val target = s"${Tables.workDir(s)}/docs_split_" +
       Tables.datasetTag(d)
-    recordSourceMass(s, docSplitCache.computeIfAbsent(target, base => {
+    docSplitCache.computeIfAbsent(target, base => {
       val t = graft.functions.Dedup.incThreshold(s, d)
       writeSplitFiles(base, Tables.stableCheckpoint(
         Tables.documents(s, d).filter(col("doc_id") > t)
           .repartitionByRange(sourceBatches, col("doc_id"))
           .withColumn("_p", spark_partition_id())))
       base
-    }))
+    })
   }
 
   // growing stores are per-invocation (append-only across the run's
@@ -1274,9 +1239,10 @@ object Streams extends OpFamily {
     new java.io.File(bandsPath).mkdirs()
     new java.io.File(digestPath).mkdirs()
     val outDir = new java.io.File(s"${Tables.workDir(s)}/sink_stream_admit_$inv")
+    val src = docSplitSource(s, d)
     val stream = s.readStream.schema(Tables.documents(s, d).schema)
-      .option("maxFilesPerTrigger", "1").parquet(docSplitSource(s, d))
-    withStreamShards(s) {
+      .option("maxFilesPerTrigger", "1").parquet(src)
+    withStreamShards(s, splitShards(s, src)) {
       val q = stream.writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
           val s2 = batch.sparkSession
@@ -1357,13 +1323,13 @@ object Streams extends OpFamily {
 
   private def idxDeltaSplitSource(s: SparkSession, d: String): String = {
     val target = s"${Tables.workDir(s)}/idxdelta_split_" + Tables.datasetTag(d)
-    recordSourceMass(s, docSplitCache.computeIfAbsent(target, base => {
+    docSplitCache.computeIfAbsent(target, base => {
       writeSplitFiles(base, Tables.stableCheckpoint(
         graft.functions.Dedup.indexDeltaActions(s, d)
           .repartitionByRange(sourceBatches, col("doc_id"))
           .withColumn("_p", spark_partition_id())))
       base
-    }))
+    })
   }
 
   /** Canonical view of base ∪ maintained growth store under the
@@ -1408,7 +1374,7 @@ object Streams extends OpFamily {
 
   private def liDeltaSplitSource(s: SparkSession, d: String, t: Long): String = {
     val target = s"${Tables.workDir(s)}/lidelta_split_" + Tables.datasetTag(d)
-    recordSourceMass(s, docSplitCache.computeIfAbsent(target, base => {
+    docSplitCache.computeIfAbsent(target, base => {
       // DIRECT split write — no stableCheckpoint, no coalesce(1): the
       // view partials are commutative monoids, so batch CONTENTS need
       // no cross-run pinning (unlike the order-sensitive admit split),
@@ -1434,22 +1400,17 @@ object Streams extends OpFamily {
       }
       rec(new java.io.File(tmp))
       base
-    }))
+    })
   }
 
   /** Bucket count for a bucketed external dimension table from its
-    * MEASURED (estimated) row mass: ~500k rows/bucket, at least 1,
-    * capped at the session shuffle default — the same sizing law the
-    * corpus-proportional shuffles use. None (unlistable source — row
-    * mass unknown) falls back to the session default: over-bucketing a
-    * small delta costs a few empty files, under-bucketing a 100x delta
-    * costs 190 M-row SMJ tasks. Pure, so Round16Spec pins the law. */
+    * MEASURED (estimated) row mass under the sizing law (Tables.shards),
+    * at least 1, capped at the session shuffle default. None
+    * (unlistable source — row mass unknown) falls back to the session
+    * default: over-bucketing a small delta costs a few empty files,
+    * under-bucketing a 100x delta costs 190 M-row SMJ tasks. */
   private[graft] def dimBucketsFor(estRows: Option[Long], sessionMax: Int): Int =
-    estRows match {
-      case None => sessionMax
-      case Some(r) =>
-        math.max(1, math.min(sessionMax.toLong, (r + 499999L) / 500000L).toInt)
-    }
+    estRows.fold(sessionMax)(Tables.shards(_, cap = sessionMax))
 
   private def streamViewMaintain(s: SparkSession, d: String): DataFrame = {
     import graft.operators.Relational
@@ -1527,7 +1488,7 @@ object Streams extends OpFamily {
       // start, nothing else in the JVM sees it.
       Tables.withScopedConf(s,
         "spark.sql.legacy.bucketedTableScan.outputOrdering", "true") {
-        withStreamShards(s) {
+        withStreamShards(s, splitShards(s, srcDir)) {
           val q = stream.writeStream
             .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
               val s2 = batch.sparkSession
@@ -1568,7 +1529,7 @@ object Streams extends OpFamily {
     val srcDir = idxDeltaSplitSource(s, d)
     val stream = s.readStream.schema(s.read.parquet(srcDir).schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    withStreamShards(s) {
+    withStreamShards(s, splitShards(s, srcDir)) {
       val q = stream.writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
           val s2 = batch.sparkSession

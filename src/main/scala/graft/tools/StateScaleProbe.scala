@@ -42,7 +42,9 @@ object StateScaleProbe {
     var stateRows = 0L
     var stateMem = 0L
     var custom = "{}"
-    graft.streaming.Streams.withStreamShards(s) {
+    // one state key per event: row-scale state, sized like stream_dedup
+    graft.streaming.Streams.withStreamShards(s,
+        graft.streaming.Streams.eventShards(s, d, rowScaleState = true)) {
       val q = admitStream(s, d).writeStream
         .foreachBatch {
           (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],

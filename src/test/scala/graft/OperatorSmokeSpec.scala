@@ -1,10 +1,6 @@
 package graft
 
 /** Every declared operator runs and produces a sane result shape. */
-// Tagged Slow: excluded from the default `sbt test` (the driver's
-// wall-clock budget gate — r14's full suite was cut off mid-run);
-// the full set runs with `sbt -Dgraft.slowTests=true test`.
-@org.scalatest.tags.Slow
 class OperatorSmokeSpec extends SparkSpec {
   private val mayBeEmpty = Set(
     "anti_join",        // every sf0.001 customer has orders

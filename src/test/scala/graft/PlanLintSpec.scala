@@ -7,10 +7,6 @@ package graft
   * A query may appear in an allowlist ONLY with the reason its
   * occurrence is intentional.
   */
-// Tagged Slow: excluded from the default `sbt test` (the driver's
-// wall-clock budget gate — r14's full suite was cut off mid-run);
-// the full set runs with `sbt -Dgraft.slowTests=true test`.
-@org.scalatest.tags.Slow
 class PlanLintSpec extends SparkSpec {
 
   // intentional occurrences, with why

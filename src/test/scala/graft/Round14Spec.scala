@@ -264,7 +264,7 @@ class Round14Spec extends SparkSpec {
       rec(tmp); dst
     }
     def runStore(srcDir: String, ckpt: String, storeDir: String): Unit =
-      Streams.withStreamShards(spark) {
+      Streams.withStreamShards(spark, 2) {
         val q = spark.readStream
           .schema(spark.read.parquet(srcDir).schema)
           .option("maxFilesPerTrigger", "1").parquet(srcDir)

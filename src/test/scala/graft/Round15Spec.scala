@@ -187,7 +187,7 @@ class Round15Spec extends SparkSpec {
     }
     def runGrowth(srcDir: String, ckpt: String)(
         body: (DataFrame, Long) => Unit): Unit =
-      Streams.withStreamShards(spark) {
+      Streams.withStreamShards(spark, 2) {
         val q = spark.readStream
           .schema(spark.read.parquet(srcDir).schema)
           .option("maxFilesPerTrigger", "1").parquet(srcDir)

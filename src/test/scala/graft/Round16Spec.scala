@@ -4,15 +4,11 @@ import org.apache.spark.sql.functions._
 
 /** Round-16 additions: the r13-advice fixes (the bench epoch parser
   * must parse the COMMITTED artifact format — escaped tail — and
-  * refuse cross-sf mover ratios), measured-mass sizing for R32's
-  * bucketed dimension, schema-driven R33 ANALYZE proven on a second
+  * refuse cross-sf mover ratios), footer row counts for R32's
+  * bucketed-dimension sizing, schema-driven R33 ANALYZE proven on a second
   * table, and the P23 compaction plan EXECUTED with a content-identity
   * oracle.
   */
-// Tagged Slow: excluded from the default `sbt test` (the driver's
-// wall-clock budget gate — r14's full suite was cut off mid-run);
-// the full set runs with `sbt -Dgraft.slowTests=true test`.
-@org.scalatest.tags.Slow
 class Round16Spec extends SparkSpec {
 
   // ---- bench epoch parser vs the real committed artifact ----
@@ -34,26 +30,6 @@ class Round16Spec extends SparkSpec {
     // meta keys never masquerade as queries
     assert(!queries.contains("sf") && !queries.contains("control_sec") &&
       !queries.contains("value"))
-  }
-
-  // ---- R32 bucketed-dimension sizing (r13 verdict item 1) ----
-
-  test("dimBucketsFor sizes buckets from measured delta mass: ~500k rows/bucket, capped") {
-    import graft.streaming.Streams
-    // small deltas: one bucket (a 30k-row sf0.1 delta must not pay
-    // 16 single-row files)
-    assert(Streams.dimBucketsFor(Some(0L), 32) == 1)
-    assert(Streams.dimBucketsFor(Some(30000L), 32) == 1)
-    assert(Streams.dimBucketsFor(Some(500000L), 32) == 1)
-    assert(Streams.dimBucketsFor(Some(500001L), 32) == 2)
-    // sf100's ~30 M-row delta: 60 wanted, capped at the session default
-    assert(Streams.dimBucketsFor(Some(30000000L), 32) == 32)
-    // a 100x delta still caps — parallelism beyond the session width
-    // belongs to the session config, not the table layout
-    assert(Streams.dimBucketsFor(Some(3000000000L), 32) == 32)
-    // unknown mass (unlistable source): session default, never 1 —
-    // under-bucketing an unknown corpus is the expensive failure
-    assert(Streams.dimBucketsFor(None, 32) == 32)
   }
 
   test("rowCountFromStats reads exact row counts off parquet footers") {

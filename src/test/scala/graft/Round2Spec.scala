@@ -10,10 +10,6 @@ import graft.streaming.{Ev, Streams}
 /** Round-2 additions: dup-cluster resolution, queryable state store,
   * incremental fold, IVF multi-probe, signal matchers (batch +
   * streaming), streaming EWMA. */
-// Tagged Slow: excluded from the default `sbt test` (the driver's
-// wall-clock budget gate — r14's full suite was cut off mid-run);
-// the full set runs with `sbt -Dgraft.slowTests=true test`.
-@org.scalatest.tags.Slow
 class Round2Spec extends SparkSpec {
 
   private def ts(min: Int) = new Timestamp(1704067200000L + min * 60000L)

@@ -6,10 +6,6 @@ import org.apache.spark.sql.functions._
   * (es_latest_state / metric_stats / stream_latest must plan as
   * HashAggregate — the max_by(struct,…) form silently falls back to
   * SortAggregate and full-sorts the log). */
-// Tagged Slow: excluded from the default `sbt test` (the driver's
-// wall-clock budget gate — r14's full suite was cut off mid-run);
-// the full set runs with `sbt -Dgraft.slowTests=true test`.
-@org.scalatest.tags.Slow
 class Round3Spec extends SparkSpec {
 
   private def assertHashAggOnly(name: String): Unit = {

@@ -14,10 +14,6 @@ package graft
   *   sbt -Dgraft.shuffle.regen=true "testOnly graft.ShuffleGoldenSpec"
   * and review the golden diff like any other code change.
   */
-// Tagged Slow: excluded from the default `sbt test` (the driver's
-// wall-clock budget gate — r14's full suite was cut off mid-run);
-// the full set runs with `sbt -Dgraft.slowTests=true test`.
-@org.scalatest.tags.Slow
 class ShuffleGoldenSpec extends SparkSpec {
 
   private val goldenPath = "tools/shuffle_golden.tsv"

@@ -25,4 +25,12 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   val sf: String = TestSpark.sf
   def run(name: String) = SparkEntry.queries(name)(spark, sf)
+
+  /** The state shard count (`spark.sql.shuffle.partitions`) each
+    * offset-log entry of the query checkpoint at `ckpt` records. */
+  def recordedShards(ckpt: String): Seq[Int] =
+    Option(new java.io.File(ckpt, "offsets").listFiles()).getOrElse(Array.empty)
+      .filter(_.getName.forall(_.isDigit)).sortBy(_.getName.toLong).toSeq
+      .flatMap(f => "\"spark.sql.shuffle.partitions\":\"(\\d+)\"".r
+        .findFirstMatchIn(java.nio.file.Files.readString(f.toPath)).map(_.group(1).toInt))
 }

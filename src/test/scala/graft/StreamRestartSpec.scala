@@ -1,5 +1,6 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.streaming.{Ev, Streams}
@@ -40,10 +41,6 @@ import graft.streaming.{Ev, Streams}
   *  - E28 chainStream — an md5 hash chain (loss changes the head
   *    hash with probability 1 − 2⁻¹²⁸ — the strongest witness).
   */
-// Tagged Slow: excluded from the default `sbt test` (the driver's
-// wall-clock budget gate — r14's full suite was cut off mid-run);
-// the full set runs with `sbt -Dgraft.slowTests=true test`.
-@org.scalatest.tags.Slow
 class StreamRestartSpec extends SparkSpec {
 
   private def deleteRec(f: java.io.File): Unit = {
@@ -82,15 +79,17 @@ class StreamRestartSpec extends SparkSpec {
       .select("event_id", "ts", "user_id", "event_type", "value").as[Ev]
   }
 
-  /** Run `transform` over the files currently in `srcDir`, resuming
-    * from `ckpt` if it exists; every micro-batch lands as a parquet
-    * dir keyed by GLOBAL batch id (ids continue across restarts —
-    * that's the checkpoint's batch counter doing its job). Returns the
-    * state operator's custom-metric keys off the last stateful
-    * progress event — the provider-engagement witness. */
+  /** Run `transform` over the files currently in `srcDir` with
+    * `shards` state shards, resuming from `ckpt` if it exists; every
+    * micro-batch lands as a parquet dir keyed by GLOBAL batch id (ids
+    * continue across restarts — that's the checkpoint's batch counter
+    * doing its job). Returns the last stateful progress event's state
+    * operator: its custom-metric keys are the provider-engagement
+    * witness, its shard count the one the query actually ran with. */
   private def runOnce(srcDir: String, ckpt: String, sink: java.io.File,
-      transform: Dataset[Ev] => DataFrame): Set[String] =
-    Streams.withStreamShards(spark) {
+      transform: Dataset[Ev] => DataFrame,
+      shards: Int = 2): Option[org.apache.spark.sql.streaming.StateOperatorProgress] =
+    Streams.withStreamShards(spark, shards) {
       val q = transform(evStream(srcDir)).writeStream
         .option("checkpointLocation", ckpt)
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
@@ -100,15 +99,10 @@ class StreamRestartSpec extends SparkSpec {
         .outputMode("update")
         .start()
       q.processAllAvailable()
-      val keys = q.recentProgress.reverseIterator
-        .find(_.stateOperators.nonEmpty)
-        .map { p =>
-          import scala.jdk.CollectionConverters._
-          p.stateOperators.head.customMetrics.keySet.asScala.toSet
-        }
-        .getOrElse(Set.empty[String])
+      val op = q.recentProgress.reverseIterator
+        .find(_.stateOperators.nonEmpty).map(_.stateOperators.head)
       q.stop()
-      keys
+      op
     }
 
   private type Row = org.apache.spark.sql.Row
@@ -168,7 +162,8 @@ class StreamRestartSpec extends SparkSpec {
         new java.io.File(partSrc, splits(2).getName).toPath)
       val t0 = System.nanoTime()
       val metricKeys =
-        runOnce(partSrc.getPath, s"$root/ckpt_kill", sink, transform)
+        runOnce(partSrc.getPath, s"$root/ckpt_kill", sink, transform).toSeq
+          .flatMap(_.customMetrics.keySet.asScala).toSet
       val resumeS = (System.nanoTime() - t0) / 1e9
       // the recorded restore cost: a fresh query lifetime that must
       // load state from the checkpoint before its single new batch
@@ -224,5 +219,36 @@ class StreamRestartSpec extends SparkSpec {
   test("E28 stream_audit_chain restart under rocksdb snapshot checkpointing (cost comparison)") {
     restartCase("chain", chainCols, provider = "rocksdb", changelog = false)(
       ds => Streams.chainStream(ds).toDF())
+  }
+
+  test("a restarted stream keeps the state shard count its checkpoint recorded") {
+    // Spark pins spark.sql.shuffle.partitions in the offset log's
+    // metadata: state is hash-partitioned by that modulus, so a resumed
+    // query must ignore the count computed at restart (here 5) and run
+    // with the recorded one (3) — re-deriving it would route keys to
+    // the wrong state stores
+    val root = new java.io.File("/tmp/graft_restart_pin")
+    deleteRec(root)
+    val allSrc = new java.io.File(root, "src_all"); allSrc.mkdirs()
+    val splits = writeSplits(allSrc)
+    val transform = (ds: Dataset[Ev]) => Streams.foldEvents(ds).toDF()
+    runOnce(allSrc.getPath, s"$root/ckpt_ref", new java.io.File(root, "sink_ref"),
+      transform, shards = 3)
+    val expected = lastPerKey(new java.io.File(root, "sink_ref"), foldCols)
+    val partSrc = new java.io.File(root, "src_part"); partSrc.mkdirs()
+    splits.take(2).foreach(f => java.nio.file.Files.copy(f.toPath,
+      new java.io.File(partSrc, f.getName).toPath))
+    val ckpt = s"$root/ckpt_kill"
+    val sink = new java.io.File(root, "sink_kill")
+    assert(runOnce(partSrc.getPath, ckpt, sink, transform, shards = 3)
+      .map(_.numShufflePartitions).contains(3L))
+    java.nio.file.Files.copy(splits(2).toPath,
+      new java.io.File(partSrc, splits(2).getName).toPath)
+    val resumed = runOnce(partSrc.getPath, ckpt, sink, transform, shards = 5)
+    assert(resumed.map(_.numShufflePartitions).contains(3L),
+      s"resumed query must keep the recorded 3 shards, ran with $resumed")
+    assert(recordedShards(ckpt) == Seq(3, 3, 3))
+    assert(lastPerKey(sink, foldCols) == expected)
+    deleteRec(root)
   }
 }
